@@ -545,11 +545,17 @@ def dedup_embeddings_against_index(
     index — candidates are scored inside matching cells only, never
     all-pairs, and history is never rescanned. Within-batch semantics are
     one-pass lower-id-wins (any row with a smaller-id near-duplicate in
-    the same batch drops — MinHash-dedup convention). With
-    ``commit=True`` the survivors' index rows append atomically AFTER the
-    filter, so a crash re-admits rather than loses; replaying the same
-    batch then drops its rows against the committed entries (each row now
-    has an exact-equal index entry — caught by construction).
+    the same batch drops — MinHash-dedup convention).
+
+    This is the detect step of the ``embedding`` ingest mode: detect →
+    publish → append. Publishing callers (the runner, the streaming
+    writer) go through ``dedup.ingest_detect`` (``commit=False``),
+    publish the kept rows, then record what published with
+    ``dedup.ingest_append``, so a crash re-admits rather than loses;
+    replaying the same batch then drops its rows against the committed
+    entries (each row now has an exact-equal index entry — caught by
+    construction). ``commit=True`` appends the survivors' index rows
+    right away, through the same ``dedup.ingest_append``.
 
     Recall is probabilistic for NEAR (not exact) duplicates: a pair is
     scored only if some band's comparison pattern matches — raise
@@ -772,30 +778,12 @@ def dedup_embeddings_against_index(
     if stats is not None:
         stats["n_kept"] = n_kept
     if commit and n_kept:
-        from dativo_ingest_spark.operators.util import (
-            index_append_partitions)
+        from dativo_ingest_spark.operators.dedup import ingest_append
 
-        # coalesced append: see dedup.dedup_against_index — avoids one
-        # near-empty index file per shuffle partition per batch. The
-        # coalesce goes on the INPUT, not the computed entries: a
-        # coalesce above the encode chain makes the single write task
-        # evaluate one ArrowEvalPython/expression chain PER PARENT
-        # partition (a fresh Python runner each, serially — measured
-        # 9.3 s vs 1.0 s on a 500-row batch over 32 cached partitions),
-        # while coalescing the cached kept rows first runs the chain
-        # once per output file. Per-task encode work stays bounded by
-        # INDEX_APPEND_ROWS_PER_FILE entry rows.
-        src = kept.coalesce(index_append_partitions(n_kept * bands))
-        if index_codec == "pq":
-            entries = index_entries_pq(src, id_col, vec_col, codebooks,
-                                       bands, band_width, scale)
-        elif index_codec == "pq_residual":
-            entries = index_entries_pq_residual(
-                src, id_col, vec_col, artifact, bands, band_width)
-        else:
-            entries = index_entries(src, id_col, vec_col, bands,
-                                    band_width)
-        index_table.write_append(entries, branch=branch)
+        ingest_append(kept, id_col, vec_col, index_table, "embedding",
+                      n_kept, branch=branch, bands=bands,
+                      band_width=band_width, index_codec=index_codec,
+                      codebooks=codebooks, scale=scale, artifact=artifact)
     staged.unpersist()
     return kept, n_batch_dups, n_index_dups
 
@@ -807,14 +795,13 @@ def index_entries(
     bands: int = 4,
     band_width: int = 8,
 ) -> DataFrame:
-    """The banded cell-index rows for ``df`` — what
-    :func:`dedup_embeddings_against_index` commits (``bands`` rows per
-    document: id, band key, vector, norm). Exposed separately for callers
-    that defer the index append until after their own sink publish (same
-    contract as ``dedup.index_entries``); the keys/norms are deterministic
-    expressions, so deferred rows match an inline commit. Pass the SAME
-    ``bands``/``band_width`` the dedup call used — mismatched keys make
-    future batches miss the entries."""
+    """The banded cell-index rows for ``df`` (``bands`` rows per
+    document: id, band key, vector, norm) — the raw-codec entry builder
+    ``dedup.ingest_append`` calls after the kept rows published. The
+    keys/norms are deterministic expressions, so the entries match what
+    :func:`dedup_embeddings_against_index` scored, given the SAME
+    ``bands``/``band_width`` — mismatched keys make future batches miss
+    the entries."""
     staged = df.withColumn("_vec", vectors.as_double_array(F.col(vec_col)))
     return staged.select(
         F.col(id_col).cast("string").alias("id"),
@@ -834,10 +821,9 @@ def index_entries_pq(
     band_width: int = 8,
     scale: int = 10_000,
 ) -> DataFrame:
-    """The PQ-coded banded index rows — what
-    :func:`dedup_embeddings_against_index` commits under
-    ``index_codec="pq"`` (``bands`` rows per document: id, band key,
-    PQ ``codes``, TRUE raw-unit L2 ``norm``). Codes store as the
+    """The PQ-coded banded index rows — what ``dedup.ingest_append``
+    writes under ``index_codec="pq"`` (``bands`` rows per document: id,
+    band key, PQ ``codes``, TRUE raw-unit L2 ``norm``). Codes store as the
     narrowest integer type that holds ``k`` (tinyint ≤ 128 codes,
     else smallint ≤ 32768, else long), so a d=64 float64 vector
     (512 B) indexes as m small ints + one double — the ~8–16×

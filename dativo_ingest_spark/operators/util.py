@@ -9,7 +9,13 @@ def widen(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the scan produced fewer partitions than
     cores (tiny/single-file inputs) so expression- or Python-heavy pipeline
     stages use the whole executor pool. No-op at scale, where scans already
-    have ample partitions — the check costs a plan inspection, never a job."""
+    have ample partitions.
+
+    The check is free only on a plain scan. ``df.rdd`` builds the physical
+    plan, and under AQE that runs every shuffle stage below it: on a
+    4-core local session it launched 0 jobs over a parquet scan, 1 over a
+    ``groupBy`` frame and 2 over a persisted ``groupBy`` frame. Call it
+    near the source, or count those jobs as part of the caller's cost."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

@@ -35,6 +35,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from dativo_ingest_spark import catalog as catalog_mod
 from dativo_ingest_spark import infrastructure
@@ -347,11 +348,15 @@ def run_job(
                 raise ConfigError(
                     "shard.mixture: n_rounds and eta_milli must be "
                     ">= 0")
-    # dedup-on-ingest config (operators/dedup.py:dedup_against_index /
-    # operators/similarity.py:dedup_embeddings_against_index): validated
-    # before any data moves, like every other target option.
+    # dedup-on-ingest config (operators/dedup.py:ingest_detect /
+    # ingest_append): translated once into the operators' keyword options
+    # and validated before any data moves, like every other target option.
+    # Defaults live only in the operator signatures (dedup.ingest_options).
     _dd = job.target.options.get("dedup")
+    dedup_opts: dict[str, Any] = {}
     if _dd is not None:
+        from dativo_ingest_spark.operators import dedup as dedup_mod
+
         _dd = dict(_dd)
         if not (_dd.get("index") and _dd.get("id_field")
                 and _dd.get("content_field")):
@@ -363,47 +368,38 @@ def run_job(
             raise ConfigError(
                 "target.options.dedup.mode must be exact, embedding or "
                 f"minhash, got {_dd['mode']!r}")
-        if _dd["mode"] in ("embedding", "minhash"):
-            _thr = float(_dd.get(
-                "threshold", 0.95 if _dd["mode"] == "embedding" else 0.5))
-            if not (0.0 < _thr <= 1.0):
-                raise ConfigError(
-                    "target.options.dedup.threshold must be in (0, 1], "
-                    f"got {_thr}")
-        if _dd["mode"] == "minhash":
-            _nh = int(_dd.get("num_hashes", 8))
-            _rpb = int(_dd.get("rows_per_band", 2))
-            if _rpb < 1 or _nh % _rpb != 0:
-                raise ConfigError(
-                    "target.options.dedup.rows_per_band must divide "
-                    f"num_hashes (got {_rpb} / {_nh})")
+        # YAML key -> operator keyword (only ngram is renamed, to n)
+        for _key, _cast in (("threshold", float), ("bands", int),
+                            ("band_width", int), ("num_hashes", int),
+                            ("rows_per_band", int), ("ngram", int),
+                            ("index_codec", str)):
+            if _key in _dd:
+                dedup_opts["n" if _key == "ngram" else _key] = _cast(
+                    _dd[_key])
+        _codec = dedup_opts.get("index_codec")
+        if _codec not in (None, "raw", "pq", "pq_residual"):
+            raise ConfigError(
+                "target.options.dedup.index_codec must be raw, pq or "
+                f"pq_residual, got {_codec!r}")
         # PQ-coded embedding index (r12): codebooks ship as a JSON
         # artifact (the classifier-model pattern) since a trained
         # m x k x sub float tensor cannot ride YAML
-        _dd["index_codec"] = str(_dd.get("index_codec", "raw"))
-        if _dd["index_codec"] not in ("raw", "pq", "pq_residual"):
-            raise ConfigError(
-                "target.options.dedup.index_codec must be raw, pq or "
-                f"pq_residual, got {_dd['index_codec']!r}")
-        if _dd["index_codec"] in ("pq", "pq_residual"):
+        if _codec in ("pq", "pq_residual"):
             if _dd["mode"] != "embedding":
                 raise ConfigError(
-                    f"target.options.dedup.index_codec="
-                    f"{_dd['index_codec']} applies only to "
-                    "mode=embedding")
+                    f"target.options.dedup.index_codec={_codec} applies "
+                    "only to mode=embedding")
             _cb_path = _dd.get("codebooks")
             if not _cb_path:
                 raise ConfigError(
-                    f"target.options.dedup.index_codec="
-                    f"{_dd['index_codec']} needs codebooks (path to a "
-                    "JSON artifact: quantization.pq_train output under "
-                    "key 'codebooks' for pq, the full "
-                    "quantization.ivfpq_train_artifact dict for "
-                    "pq_residual)")
-            import json as _json
+                    f"target.options.dedup.index_codec={_codec} needs "
+                    "codebooks (path to a JSON artifact: "
+                    "quantization.pq_train output under key 'codebooks' "
+                    "for pq, the full quantization.ivfpq_train_artifact "
+                    "dict for pq_residual)")
             try:
                 with open(str(_cb_path)) as _fh:
-                    _cb = _json.load(_fh)
+                    _cb = json.load(_fh)
             except (OSError, ValueError) as exc:
                 raise ConfigError(
                     f"target.options.dedup.codebooks: cannot load "
@@ -416,11 +412,10 @@ def run_job(
                     "target.options.dedup.codebooks artifact must hold "
                     "an m x k x sub nested list (optionally under key "
                     "'codebooks')")
-            _dd["_codebooks"] = _cb_t
-            _dd["_pq_scale"] = int(
-                (_cb.get("scale") if isinstance(_cb, dict) else None)
-                or 10_000)
-            if _dd["index_codec"] == "pq_residual":
+            dedup_opts["codebooks"] = _cb_t
+            if isinstance(_cb, dict) and _cb.get("scale"):
+                dedup_opts["scale"] = int(_cb["scale"])
+            if _codec == "pq_residual":
                 # the residual codec needs the coarse cells too — the
                 # artifact is the whole ivfpq_train_artifact dict
                 if not (isinstance(_cb, dict)
@@ -431,7 +426,19 @@ def run_job(
                         "needs the codebooks artifact to be the FULL "
                         "quantization.ivfpq_train_artifact dict "
                         "(keys cells + codebooks + scale)")
-                _dd["_artifact"] = _cb
+                dedup_opts["artifact"] = _cb
+        _dv = dedup_mod.ingest_options(_dd["mode"], dedup_opts)
+        if "threshold" in _dv and not (0.0 < _dv["threshold"] <= 1.0):
+            raise ConfigError(
+                "target.options.dedup.threshold must be in (0, 1], "
+                f"got {_dv['threshold']}")
+        if "rows_per_band" in _dv and (
+                _dv["rows_per_band"] < 1
+                or _dv["num_hashes"] % _dv["rows_per_band"]):
+            raise ConfigError(
+                "target.options.dedup.rows_per_band must divide "
+                f"num_hashes (got {_dv['rows_per_band']} / "
+                f"{_dv['num_hashes']})")
         if _wm in ("overwrite", "overwrite_partitions"):
             raise ConfigError(
                 "target.options.dedup cannot combine with mode="
@@ -506,7 +513,7 @@ def run_job(
     # Dedup-on-ingest: drop rows the corpus already holds BEFORE
     # validation/write, against a persistent index that is the compact
     # thing joined — history is never rescanned. The index append is
-    # DEFERRED to after the sink publish (commit=False here): a crash in
+    # DEFERRED to after the sink publish (ingest_append there): a crash in
     # between re-admits rows on retry, never loses them. records_in /
     # the observation below therefore count post-dedup rows; the drops
     # are reported separately in JobResult.dedup_dropped.
@@ -522,41 +529,9 @@ def run_job(
                     f"target.options.dedup field {c!r} not in the "
                     f"extracted columns {sorted(df.columns)}")
         dedup_index_table = table_commit.FsTable.create(str(_dd["index"]))
-        if _dd["mode"] == "embedding":
-            from dativo_ingest_spark.operators import (
-                similarity as similarity_mod)
-
-            kept, n_b, n_i = similarity_mod.dedup_embeddings_against_index(
-                spark, df, _dd["id_field"], _dd["content_field"],
-                dedup_index_table,
-                threshold=float(_dd.get("threshold", 0.95)),
-                bands=int(_dd.get("bands", 4)),
-                band_width=int(_dd.get("band_width", 8)),
-                commit=False,
-                index_codec=_dd.get("index_codec", "raw"),
-                codebooks=_dd.get("_codebooks"),
-                scale=int(_dd.get("_pq_scale", 10_000)),
-                artifact=_dd.get("_artifact"),
-            )
-        elif _dd["mode"] == "minhash":
-            from dativo_ingest_spark.operators import dedup as dedup_mod
-
-            kept, n_b, n_i = dedup_mod.dedup_minhash_against_index(
-                spark, df, _dd["id_field"], _dd["content_field"],
-                dedup_index_table,
-                n=int(_dd.get("ngram", 3)),
-                num_hashes=int(_dd.get("num_hashes", 8)),
-                rows_per_band=int(_dd.get("rows_per_band", 2)),
-                threshold=float(_dd.get("threshold", 0.5)),
-                commit=False,
-            )
-        else:
-            from dativo_ingest_spark.operators import dedup as dedup_mod
-
-            kept, n_b, n_i = dedup_mod.dedup_against_index(
-                spark, df, _dd["id_field"], _dd["content_field"],
-                dedup_index_table, commit=False,
-            )
+        kept, n_b, n_i = dedup_mod.ingest_detect(
+            spark, df, _dd["id_field"], _dd["content_field"],
+            dedup_index_table, _dd["mode"], **dedup_opts)
         dedup_dropped = {"batch": int(n_b), "index": int(n_i)}
         df = dedup_kept = kept
         _cleanup.append(kept)
@@ -935,8 +910,20 @@ def run_job(
             if not merge_keys:
                 raise ConfigError(
                     "target.options.mode=merge needs merge_keys")
+            updates = spark.read.parquet(stage)
+            cursor_field = inc.cursor_field if inc.enabled else None
+            if cursor_field and cursor_field in updates.columns:
+                # the >= cursor re-reads the previous batch's boundary
+                # row, and this batch may update that same key:
+                # merge_upsert needs key-unique updates, so the row with
+                # the newest cursor value wins
+                newest = Window.partitionBy(*merge_keys).orderBy(
+                    F.col(cursor_field).desc())
+                updates = (updates
+                           .withColumn("_rk", F.row_number().over(newest))
+                           .filter(F.col("_rk") == 1).drop("_rk"))
             table.merge_upsert(
-                spark, spark.read.parquet(stage), merge_keys,
+                spark, updates, merge_keys,
                 branch=branch,
                 stats_columns=sorted({*merge_keys, *pcols}),
                 properties=props,
@@ -1127,9 +1114,9 @@ def run_job(
             json.dump(props, fh, indent=2, sort_keys=True)
 
     # Commit-then-index: the sink publish above succeeded, so the kept
-    # rows' dedup-index entries may now be recorded (deferred from the
-    # commit=False call — crash before this point re-admits on retry,
-    # the safe direction). Entries derive from the operator's kept frame
+    # rows' dedup-index entries may now be recorded (ingest_detect does
+    # not commit — crash before this point re-admits on retry, the safe
+    # direction). Entries derive from the operator's kept frame
     # (it still carries the content/embedding column even when the
     # contract projection dropped it from the sink), restricted to the
     # rows that actually PUBLISHED via a semi-join on the validated
@@ -1148,62 +1135,12 @@ def run_job(
             # warn mode publishes every row — index them all directly
             # (a coerced-NULL id would silently fall out of a semi-join)
             published = dedup_kept
-        from dativo_ingest_spark.operators.util import (
-            index_append_partitions)
-
-        # coalesce the cached INPUT below the entry-encode chain (not the
-        # computed entries above it): a top-side coalesce makes the single
-        # write task re-instantiate the encode chain — including its
-        # Arrow Python runner for the PQ codecs — once per parent
-        # partition, serially (see similarity.dedup_embedding_against_index
-        # for the measured 9x). Entry rows = published rows (x bands /
-        # bands-per-sig for the banded modes); the observation's
-        # post-dedup row count is a free upper bound on published rows
-        # (the target only sizes the file count, so an extra count() job
-        # over the semi-join would be pure waste).
-        _entry_mult = (int(_dd.get("bands", 4))
-                       if _dd["mode"] == "embedding"
-                       else (int(_dd.get("num_hashes", 8))
-                             // int(_dd.get("rows_per_band", 2))
-                             if _dd["mode"] == "minhash" else 1))
-        published = published.coalesce(
-            index_append_partitions(n_rows * _entry_mult))
-        if _dd["mode"] == "embedding":
-            from dativo_ingest_spark.operators import (
-                similarity as similarity_mod)
-
-            if _dd.get("index_codec") == "pq":
-                entries = similarity_mod.index_entries_pq(
-                    published, _dd["id_field"], _dd["content_field"],
-                    _dd["_codebooks"],
-                    bands=int(_dd.get("bands", 4)),
-                    band_width=int(_dd.get("band_width", 8)),
-                    scale=int(_dd.get("_pq_scale", 10_000)))
-            elif _dd.get("index_codec") == "pq_residual":
-                entries = similarity_mod.index_entries_pq_residual(
-                    published, _dd["id_field"], _dd["content_field"],
-                    _dd["_artifact"],
-                    bands=int(_dd.get("bands", 4)),
-                    band_width=int(_dd.get("band_width", 8)))
-            else:
-                entries = similarity_mod.index_entries(
-                    published, _dd["id_field"], _dd["content_field"],
-                    bands=int(_dd.get("bands", 4)),
-                    band_width=int(_dd.get("band_width", 8)))
-        elif _dd["mode"] == "minhash":
-            from dativo_ingest_spark.operators import dedup as dedup_mod
-
-            entries = dedup_mod.index_entries_minhash(
-                published, _dd["id_field"], _dd["content_field"],
-                n=int(_dd.get("ngram", 3)),
-                num_hashes=int(_dd.get("num_hashes", 8)),
-                rows_per_band=int(_dd.get("rows_per_band", 2)))
-        else:
-            from dativo_ingest_spark.operators import dedup as dedup_mod
-
-            entries = dedup_mod.index_entries(
-                published, _dd["content_field"])
-        dedup_index_table.write_append(entries)
+        # the observation's post-dedup row count is a free upper bound
+        # on published rows (it only sizes the file count, so an extra
+        # count() job over the semi-join would be pure waste)
+        dedup_mod.ingest_append(
+            published, _dd["id_field"], _dd["content_field"],
+            dedup_index_table, _dd["mode"], n_rows, **dedup_opts)
 
     # informational warn-mode sample: capped scan, only when errors exist
     sample = result.error_summary() if (invalid_count and result) else []

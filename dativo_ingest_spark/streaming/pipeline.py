@@ -927,14 +927,14 @@ def dedup_epoch_writer(out_table, index_table, id_col: str,
     * after both → the replay sees the INDEX marker and returns.
 
     Epoch markers are query-scoped (``stream.epoch.{query_id}``) like
-    every exactly-once writer here. ``dedup_opts`` pass through to the
-    mode's operator (threshold, bands, num_hashes, ...).
+    every exactly-once writer here. ``dedup_opts`` are the operator
+    keyword options (threshold, bands, num_hashes, ...) shared by the
+    detect/append pair, ``operators/dedup.py:ingest_detect`` and
+    ``ingest_append`` — the same pair the runner calls.
     """
     from dativo_ingest_spark.operators import dedup as dedup_mod
 
-    if mode not in ("exact", "minhash", "embedding"):
-        raise ValueError(
-            f"mode must be exact, minhash or embedding, got {mode!r}")
+    dedup_mod.ingest_options(mode, dedup_opts)   # fail before any epoch
     qid = _query_id_resolver(query_id, checkpoint_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -949,46 +949,10 @@ def dedup_epoch_writer(out_table, index_table, id_col: str,
         ix_last = ix_head.properties.get(key)
         if ix_last is not None and int(ix_last) >= epoch_id:
             return   # fully processed epoch
-        spark = batch_df.sparkSession
-        if mode == "embedding":
-            from dativo_ingest_spark.operators import similarity
-
-            kept, _, _ = similarity.dedup_embeddings_against_index(
-                spark, batch_df, id_col, content_col, index_table,
-                branch=branch, commit=False, **dedup_opts)
-            if dedup_opts.get("index_codec") == "pq":
-                # PQ-coded index (r12): the deferred entries must carry
-                # codes, not raw vectors, or the next epoch's reader
-                # finds the wrong schema
-                entries = similarity.index_entries_pq(
-                    kept, id_col, content_col, dedup_opts["codebooks"],
-                    **{k: v for k, v in dedup_opts.items()
-                       if k in ("bands", "band_width", "scale")})
-            elif dedup_opts.get("index_codec") == "pq_residual":
-                # residual codec (r13): deferred entries carry coarse
-                # cell + residual codes under the frozen artifact
-                entries = similarity.index_entries_pq_residual(
-                    kept, id_col, content_col, dedup_opts["artifact"],
-                    **{k: v for k, v in dedup_opts.items()
-                       if k in ("bands", "band_width")})
-            else:
-                entries = similarity.index_entries(
-                    kept, id_col, content_col,
-                    **{k: v for k, v in dedup_opts.items()
-                       if k in ("bands", "band_width")})
-        elif mode == "minhash":
-            kept, _, _ = dedup_mod.dedup_minhash_against_index(
-                spark, batch_df, id_col, content_col, index_table,
-                branch=branch, commit=False, **dedup_opts)
-            entries = dedup_mod.index_entries_minhash(
-                kept, id_col, content_col,
-                **{k: v for k, v in dedup_opts.items()
-                   if k in ("n", "num_hashes", "rows_per_band")})
-        else:
-            kept, _, _ = dedup_mod.dedup_against_index(
-                spark, batch_df, id_col, content_col, index_table,
-                branch=branch, commit=False, **dedup_opts)
-            entries = dedup_mod.index_entries(kept, content_col)
+        stats: dict = {}
+        kept, _, _ = dedup_mod.ingest_detect(
+            batch_df.sparkSession, batch_df, id_col, content_col,
+            index_table, mode, branch=branch, stats=stats, **dedup_opts)
         try:
             out_head = out_table.snapshot(
                 out_table.current_version(branch))
@@ -998,8 +962,10 @@ def dedup_epoch_writer(out_table, index_table, id_col: str,
                     kept, branch=branch, properties={key: str(epoch_id)})
             # index entries append AFTER the publish (crash re-derives,
             # never loses) with its own marker
-            index_table.write_append(
-                entries, branch=branch, properties={key: str(epoch_id)})
+            dedup_mod.ingest_append(
+                kept, id_col, content_col, index_table, mode,
+                stats["n_kept"], properties={key: str(epoch_id)},
+                branch=branch, **dedup_opts)
         finally:
             kept.unpersist()
 

@@ -482,6 +482,41 @@ def test_table_commit_merge_mode_is_idempotent_upsert(spark, tmp_path):
     assert got == {1: "alice", 2: "robert", 3: "carol"}
 
 
+def test_merge_mode_keeps_newest_row_for_reread_boundary_key(spark,
+                                                             tmp_path):
+    """The >= cursor re-reads the previous batch's boundary row; when the
+    next batch updates that same key, only the newer row may publish."""
+    from dativo_ingest_spark.sinks.table_commit import FsTable
+
+    src = str(tmp_path / "changes")
+    schema = "id long, name string, seq long"
+    spark.createDataFrame([(1, "alice", 1), (2, "bob", 2)],
+                          schema).write.parquet(src)
+    out = str(tmp_path / "t")
+    d = job_dict(src, out)
+    d["source"] = {"type": "parquet", "path": src,
+                   "incremental": {"cursor_field": "seq"}}
+    d["target"]["options"] = {"mode": "merge", "commit": "table",
+                              "merge_keys": ["id"]}
+    d["asset"]["schema"] = [
+        {"name": "id", "type": "integer", "required": True},
+        {"name": "name", "type": "string"},
+        {"name": "seq", "type": "integer", "required": True},
+    ]
+    job = JobConfig.from_dict(d)
+    state = str(tmp_path / "state")
+    assert runner.run_job(spark, job, state_root=state).exit_code == 0
+    # batch 2 updates key 2, the boundary row batch 1 ended on
+    spark.createDataFrame([(2, "robert", 3), (3, "carol", 4)],
+                          schema).write.mode("append").parquet(src)
+    r2 = runner.run_job(spark, job, state_root=state)
+    assert r2.exit_code == 0
+    assert r2.records_in == 3   # the re-read boundary row plus the batch
+    rows = FsTable(out).read(spark, branch="acme").collect()
+    assert sorted((r["id"], r["name"], r["seq"]) for r in rows) == [
+        (1, "alice", 1), (2, "robert", 3), (3, "carol", 4)]
+
+
 def test_table_commit_merge_mode_requires_keys(spark, tmp_path):
     src = tmp_path / "p.csv"
     src.write_text("id,name,active\n1,a,true\n")
@@ -1130,6 +1165,86 @@ class TestDedupOnIngestOption:
             runner.run_job(spark, job(num_hashes=8, rows_per_band=3))
         with pytest.raises(ConfigError, match="threshold"):
             runner.run_job(spark, job(threshold=0.0))
+
+
+@pytest.mark.parametrize("mode,codec", [
+    ("exact", None), ("minhash", None), ("embedding", "raw"),
+    ("embedding", "pq"), ("embedding", "pq_residual")])
+def test_every_dedup_caller_writes_the_same_index_rows(spark, tmp_path,
+                                                       mode, codec):
+    """run_job, dedup_epoch_writer and the operator's own commit=True
+    write identical index rows for the same batch: a row that differs
+    would make later batches miss entries written by another caller."""
+    from dativo_ingest_spark.operators import dedup
+    from dativo_ingest_spark.operators import quantization as Q
+    from dativo_ingest_spark.operators import similarity
+    from dativo_ingest_spark.sinks.table_commit import FsTable
+    from dativo_ingest_spark.streaming.pipeline import dedup_epoch_writer
+
+    v1 = [0.5, -1.5, 2.5, 0.25, 3.0, -0.75, 1.0, 4.0]
+    v2 = [float((-1) ** i) * (i + 1) for i in range(8)]
+    src = str(tmp_path / "b")
+    spark.createDataFrame([
+        (1, "the quick brown fox jumps over the lazy dog", True, v1),
+        (2, "entirely different spark shuffle words here", True, v2),
+        (3, "fresh unrelated material with new words", True, [1.0] * 8),
+        (4, "the quick brown fox jumps over the lazy dog", True,
+         [x * 2.0 for x in v1]),
+    ], "id long, name string, active boolean, embedding array<double>"
+    ).write.parquet(src)
+    batch = spark.read.parquet(src)
+    content = "embedding" if mode == "embedding" else "name"
+    # non-default knobs, so a caller that drops one writes other rows
+    yaml_opts, op_opts = {
+        "exact": ({}, {}),
+        "minhash": ({"ngram": 2, "rows_per_band": 4},
+                    {"n": 2, "rows_per_band": 4}),
+        "embedding": ({"bands": 2, "band_width": 4},
+                      {"bands": 2, "band_width": 4}),
+    }[mode]
+    if codec is not None:
+        yaml_opts = {**yaml_opts, "index_codec": codec}
+        op_opts = {**op_opts, "index_codec": codec}
+    if codec == "pq":
+        cbs = Q.pq_train(batch, "id", "embedding", m=4, k=2, n_iter=2)
+        artifact = {"codebooks": cbs, "scale": 1000}
+        op_opts.update(codebooks=cbs, scale=1000)
+    elif codec == "pq_residual":
+        artifact = Q.ivfpq_train_artifact(
+            batch, "id", "embedding", m=4, k_codes=2, n_cells=2, n_iter=2)
+        op_opts.update(artifact=artifact)
+    if codec in ("pq", "pq_residual"):
+        art = tmp_path / "codebooks.json"
+        art.write_text(json.dumps(artifact))
+        yaml_opts["codebooks"] = str(art)
+
+    def rows(index_path):
+        got = FsTable.create(index_path).read(spark).collect()
+        return sorted(json.dumps(r.asDict(), sort_keys=True) for r in got)
+
+    d = job_dict(src, str(tmp_path / "o"))
+    d["source"] = {"type": "parquet", "path": src}
+    d["target"]["options"] = {"mode": "append", "dedup": {
+        "index": str(tmp_path / "ix_runner"), "id_field": "id",
+        "content_field": content, "mode": mode, **yaml_opts}}
+    assert runner.run_job(spark, JobConfig.from_dict(d)).exit_code == 0
+
+    dedup_epoch_writer(
+        FsTable.create(str(tmp_path / "out_stream")),
+        FsTable.create(str(tmp_path / "ix_stream")), "id", content,
+        mode=mode, query_id="q", **op_opts)(batch, 0)
+
+    detect = {"exact": dedup.dedup_against_index,
+              "minhash": dedup.dedup_minhash_against_index,
+              "embedding": similarity.dedup_embeddings_against_index}[mode]
+    kept, _, _ = detect(spark, batch, "id", content,
+                        FsTable.create(str(tmp_path / "ix_op")), **op_opts)
+    kept.unpersist()
+
+    want = rows(str(tmp_path / "ix_op"))
+    assert want
+    assert rows(str(tmp_path / "ix_runner")) == want
+    assert rows(str(tmp_path / "ix_stream")) == want
 
 
 class TestDriftGate:

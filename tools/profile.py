@@ -1,9 +1,13 @@
-"""r15 optimization measurement harness.
+"""Optimization measurement harness, one round at a time.
+
+Usage: ``python tools/profile.py ROUND (--plans | --time) [names...]``,
+where ``ROUND`` is the round tag (``r14``, ``r15``, ...) that names the
+plans directory and the Spark app.
 
 Two modes:
 
 * ``--plans [names...]`` — build each query at sf0.1 and save
-  ``.explain("formatted")`` to ``plans/r15/<name>_<tag>.txt`` (tag =
+  ``.explain("formatted")`` to ``plans/<ROUND>/<name>_<tag>.txt`` (tag =
   ``before``/``after`` via ``--tag``). Build-time side effects (eager
   probes, index commits) run, nothing else is executed.
 * ``--time [names...]`` — bench-methodology timing: warm each query once
@@ -23,19 +27,22 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+# this file shadows the stdlib ``profile`` module that pyspark's cProfile
+# import needs, so its own directory must leave the import path
+sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != _HERE]
+sys.path.insert(0, os.path.dirname(_HERE))
 
 from dativo_ingest_spark import get_spark  # noqa: E402
 from dativo_ingest_spark.queries import QUERIES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "plans", "r15")
+PLANS_ROOT = os.path.join(os.path.dirname(_HERE), "plans")
 
 
-def _spark(cpus: str):
+def _spark(round_tag: str, cpus: str):
     spark = get_spark(
-        "r15-profile",
+        f"{round_tag}-profile",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
         extra_conf={
@@ -58,20 +65,22 @@ def capture_plan(df) -> str:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("round", help="round tag, e.g. r15")
     ap.add_argument("--plans", action="store_true")
     ap.add_argument("--time", action="store_true")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     ap.add_argument("names", nargs="*")
-    args = ap.parse_args()
+    args = ap.parse_intermixed_args()
 
     import bench
     names = args.names or bench.HEADLINE
-    spark = _spark(args.cpus)
+    spark = _spark(args.round, args.cpus)
+    plans_dir = os.path.join(PLANS_ROOT, args.round)
 
     if args.plans:
-        os.makedirs(PLANS_DIR, exist_ok=True)
+        os.makedirs(plans_dir, exist_ok=True)
         for name in names:
             spark.sparkContext.setJobDescription(f"plan: {name}")
             spark.catalog.clearCache()
@@ -80,7 +89,7 @@ def main() -> None:
                 text = capture_plan(df)
             except Exception as ex:  # noqa: BLE001
                 text = f"ERROR {type(ex).__name__}: {ex}"
-            path = os.path.join(PLANS_DIR, f"{name}_{args.tag}.txt")
+            path = os.path.join(plans_dir, f"{name}_{args.tag}.txt")
             with open(path, "w") as fh:
                 fh.write(text)
             n_ex = text.count("Exchange")
